@@ -23,7 +23,7 @@ import struct
 from collections.abc import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -45,19 +45,6 @@ PAGE_SCHEMA = StructType(
 )
 
 
-def read_binary_dir(
-    spark: SparkSession, path: str, glob: str = "*.pdf"
-) -> DataFrame:
-    """S11-analog ingest: a landing zone of binary documents becomes
-    (path, modificationTime, length, content) — the engine's document
-    corpus bronze table (``spark.read.format("binaryFile")``)."""
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-    )
-
-
 # --------------------------------------------------------------------------
 # Pluggable decoders (real impls are optional extras; fakes are
 # deterministic so tests and oracles are stable)
@@ -76,15 +63,6 @@ def fake_rasterize(content: bytes, dpi: int = 300) -> list[tuple[bytes, int, int
         (hashlib.md5(content + struct.pack("<i", p)).digest() * 4, w, hgt)
         for p in range(n_pages)
     ]
-
-
-def real_rasterize(content: bytes, dpi: int = 300):  # pragma: no cover
-    """Real decoder (requires poppler + pdf2image — not in this
-    container). Same signature as ``fake_rasterize``."""
-    raise NotImplementedError(
-        "pdf2image/poppler not available; inject fake_rasterize or "
-        "install the 'documents' extra on the cluster image"
-    )
 
 
 def explode_pages(
@@ -144,30 +122,12 @@ def fake_invert(image: bytes) -> bytes:
     return bytes(255 - b for b in image)
 
 
-def real_invert(image: bytes) -> bytes:  # pragma: no cover
-    """Real decoder path (decode → cv2.bitwise_not → re-encode);
-    needs opencv, absent in this container."""
-    raise NotImplementedError(
-        "opencv not available; inject fake_invert or install the "
-        "'vision' extra on the cluster image"
-    )
-
-
 def fake_enhance(image: bytes) -> bytes:
     """Deterministic stand-in for the reference's enhance chain
     (``ocr.py:91-99``: Gaussian blur → adaptive threshold → Otsu →
     sharpen). XORs a marker nibble so tests can prove the stage ran
     while staying a pure, invertible byte transform."""
     return bytes(b ^ 0x0F for b in image)
-
-
-def real_enhance(image: bytes) -> bytes:  # pragma: no cover
-    """Real chain: GaussianBlur(5,5) → adaptiveThreshold(GAUSSIAN, 3,
-    3) → Otsu binarize → 3x3 sharpen kernel (``ocr.py:91-99``)."""
-    raise NotImplementedError(
-        "opencv not available; inject fake_enhance or install the "
-        "'vision' extra on the cluster image"
-    )
 
 
 def preprocess_pages(

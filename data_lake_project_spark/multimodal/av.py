@@ -78,16 +78,6 @@ def make_fake_frame_decoder() -> Callable[[bytes, int], list]:
 fake_decode_frames = make_fake_frame_decoder()
 
 
-def real_decode_frames(
-    content: bytes, every_ms: int = 1000
-):  # pragma: no cover - ffmpeg absent in this env
-    """Real decoder (ffmpeg/pyav). Same signature as the fake."""
-    raise NotImplementedError(
-        "pyav/ffmpeg not available; inject fake_decode_frames or "
-        "install the 'av' extra on the cluster image"
-    )
-
-
 def sample_frames(
     videos: DataFrame,
     every_ms: int = 1000,
@@ -175,15 +165,6 @@ def make_fake_audio_extractor() -> Callable[[bytes], tuple]:
 
 #: the default extractor instance (by-value-picklable closure)
 fake_audio_features = make_fake_audio_extractor()
-
-
-def real_audio_features(
-    content: bytes, n_mels: int = 16
-):  # pragma: no cover - librosa absent in this env
-    raise NotImplementedError(
-        "librosa not available; inject fake_audio_features or install "
-        "the 'av' extra on the cluster image"
-    )
 
 
 def audio_features(

@@ -24,6 +24,7 @@ Join cost scales with the batch band count, never the corpus.
 
 from __future__ import annotations
 
+import functools
 import json
 from dataclasses import dataclass
 
@@ -37,6 +38,7 @@ from data_lake_project_spark.multimodal.phash import (
     ahash64,
     hamming64,
 )
+from data_lake_project_spark.streaming.pipeline import GateLane, commit_batch
 
 _PARAMS = "params.json"
 
@@ -239,6 +241,79 @@ def gate_against_phash_index(
     return batch.join(dup, index.params["id_col"], "left_anti")
 
 
+def _phash_lane(
+    spark: SparkSession, index_path: str, image_col: str, max_hamming: int
+) -> GateLane:
+    """The image lane of the gate-and-fold protocol, over the index
+    state at ``index_path``. One fingerprint pass over the batch
+    (``fp``, cut by the protocol) serves the collision guard, the
+    intra-batch self-join, the index gate and the fold."""
+    from data_lake_project_spark.multimodal.phash import phash_neardup
+
+    idx = load_phash_index(spark, index_path)
+    id_col = idx.params["id_col"]
+
+    @functools.cache
+    def doomed(fp: DataFrame) -> DataFrame:
+        # keep-lowest-id: the larger-id end of every in-batch pair;
+        # cached so the gate and the fold share one eager pair cut
+        return (
+            phash_neardup(fp, id_col=id_col, max_hamming=max_hamming)
+            .select(F.col("id_b").alias(id_col))
+            .distinct()
+        )
+
+    def gate(batch: DataFrame, fp: DataFrame) -> DataFrame:
+        # one anti-join against the doomed ends keeps every non-doomed
+        # row — fingerprinted survivors AND empty/NULL rasters (which
+        # never fingerprint, so never appear in a pair) — with no
+        # special-case passthrough union
+        drop = doomed(fp)
+        batch = batch.join(drop, id_col, "left_anti")
+        prior = PhashIndex(
+            idx.params,
+            idx.codes.join(batch.select(id_col), id_col, "left_anti"),
+        )
+        return gate_against_phash_index(
+            prior,
+            batch,
+            image_col,
+            max_hamming,
+            batch_codes=fp.join(drop, id_col, "left_anti"),
+        )
+
+    def fold(survivors: DataFrame, fp: DataFrame) -> None:
+        # the fold reuses the same fingerprint pass, kept to survivor
+        # ids: empty/NULL-raster passthrough rows never fingerprint,
+        # exactly matching what rehashing the survivors would produce
+        phash_index_apply(
+            spark,
+            index_path,
+            survivors,
+            image_col=image_col,
+            delta_codes=fp.join(doomed(fp), id_col, "left_anti").join(
+                survivors.select(id_col), id_col, "left_semi"
+            ),
+        )
+
+    return GateLane(
+        id_col=id_col,
+        fingerprint=lambda batch: build_phash_index(
+            batch, image_col=image_col, id_col=id_col
+        ).codes,
+        # stored codes always carry a fingerprint
+        stored=idx.codes.select(
+            id_col, *[F.col(c).alias(f"s_{c}") for c in _BAND_COLS]
+        ),
+        differs=" OR ".join(f"{c} <> s_{c}" for c in _BAND_COLS),
+        gate=gate,
+        fold=fold,
+        caller="gate_and_fold_batch",
+        fingerprint_name="fingerprint",
+        payload_name="bytes",
+    )
+
+
 def gate_and_fold_batch(
     batch: DataFrame,
     batch_id: int,
@@ -247,12 +322,15 @@ def gate_and_fold_batch(
     image_col: str = "image",
     max_hamming: int = 3,
 ) -> None:
-    """One micro-batch of the streaming ingest-AND-fold loop: drop the
-    batch's OWN intra-batch near-duplicates (keep-lowest-id), gate the
-    survivors against the CURRENT index state, land them in the
-    batch's own sink directory, fold them into the index, then mark
-    the batch committed. Module-level (not a closure) so the replay
-    window can be pinned directly in tests.
+    """One micro-batch of the image ingest-AND-fold loop, through the
+    exactly-once protocol of ``streaming.pipeline.commit_batch``: drop
+    the batch's OWN intra-batch near-duplicates (keep-lowest-id), gate
+    the survivors against the CURRENT index state minus the batch's
+    own ids, land them in the batch's sink directory, fold them into
+    the index, then mark the batch committed. Module-level so the
+    replay window can be pinned directly in tests; stream it with
+    ``write_idempotent_foreach_batch(lane=functools.partial(
+    gate_and_fold_batch, index_path=...))``.
 
     Intra-batch dedup: a real crawl burst delivers an original AND its
     perceptual twin inside ONE micro-batch — neither is in the prior
@@ -268,160 +346,15 @@ def gate_and_fold_batch(
     and fingerprints.
 
     Id contract: ``doc_id`` is a stable replay key — a replayed batch
-    carries the SAME (id, bytes) rows. A batch id that already exists
-    in the index with a DIFFERENT fingerprint is an id collision, not
-    a replay; it would silently desync sink and index (admitted by the
-    own-id-excluded gate, dropped by the fold's stored-id guard), so
-    it raises instead.
-
-    Exactly-once under foreachBatch's at-least-once contract, by
-    construction across every crash window:
-
-    - committed marker present -> pure no-op (fast replay skip);
-    - the gate runs against the index state EXCLUDING this batch's own
-      ids (one anti-join on the codes) — a replay after the fold
-      landed but before the marker re-derives the IDENTICAL survivor
-      set instead of rejecting every survivor as a duplicate of its
-      own folded fingerprint (silent data loss, the window a naive
-      gate-then-fold leaves open);
-    - the sink write is per-batch-directory overwrite
-      (``write_idempotent_foreach_batch`` layout, read via
-      ``read_sink``), so a replayed write rewrites, never appends;
-    - the fold itself replays as a no-op through
-      ``phash_index_apply``'s stored-id anti-join guard.
-
-    Survivors are eagerly checkpointed before use: they feed BOTH the
-    sink write and the fold, and cutting lineage keeps the fold's
-    append from re-deriving a plan that re-scans the codes directory
-    it is appending to.
+    carries the SAME (id, bytes) rows. A batch id already stored with
+    a DIFFERENT fingerprint, or arriving as an empty/NULL raster while
+    stored with one, is an id collision, not a replay, and raises.
+    The fold replays as a no-op through ``phash_index_apply``'s
+    stored-id anti-join guard.
     """
-    from data_lake_project_spark.multimodal.phash import phash_neardup
-
-    spark = batch.sparkSession
-    commits_dir = f"{out_dir.rstrip('/')}/_committed_batches"
-    marker = f"{commits_dir}/{batch_id}"
-    if fs.exists(spark, marker):
-        return
-    idx = load_phash_index(spark, index_path)
-    id_col = idx.params["id_col"]
-    # one fingerprint pass over the batch, reused by the collision
-    # guard and the intra-batch self-join (the index gate refingerprints
-    # the reduced batch — batch-sized expression work, not a corpus
-    # scan)
-    bfp = (
-        build_phash_index(batch, image_col=image_col, id_col=id_col)
-        .codes.localCheckpoint(eager=True)
-    )
-    # collision leg 1: a fingerprinted batch id stored with a
-    # DIFFERENT fingerprint. Leg 2: an UNFINGERPRINTED batch id
-    # (empty/NULL raster — excluded from bfp by build_phash_index)
-    # whose id is already stored: stored codes always carry a
-    # fingerprint, so same id => different bytes — the same collision
-    # arriving through the empty-raster passthrough, which would
-    # otherwise bypass the guard, sail through the gate, land in the
-    # sink, and no-op in the fold (sink/index desync).
-    stored_fp = idx.codes.select(
-        id_col, *[F.col(c).alias(f"s_{c}") for c in _BAND_COLS]
-    )
-    collisions = (
-        bfp.join(stored_fp, id_col)
-        .filter(" OR ".join(f"{c} <> s_{c}" for c in _BAND_COLS))
-        .select(id_col)
-        .unionByName(
-            batch.select(id_col)
-            .join(bfp.select(id_col), id_col, "left_anti")
-            .join(stored_fp.select(id_col), id_col, "left_semi")
-        )
-        .limit(1)
-        .collect()
-    )
-    if collisions:
-        raise ValueError(
-            f"gate_and_fold_batch: batch id "
-            f"{collisions[0][id_col]!r} already stored with a "
-            "DIFFERENT fingerprint — ids must be stable replay keys "
-            "(same id => same bytes); an id collision would desync "
-            "sink and index"
-        )
-    self_pairs = phash_neardup(bfp, id_col=id_col, max_hamming=max_hamming)
-    # one anti-join against the doomed (larger-id) ends keeps every
-    # non-doomed row — fingerprinted survivors AND empty/NULL rasters
-    # (which never fingerprint, so never appear in self_pairs) — with
-    # no special-case passthrough union
-    self_doomed = self_pairs.select(
-        F.col("id_b").alias(id_col)
-    ).distinct()
-    batch = batch.join(self_doomed, id_col, "left_anti")
-    prior = PhashIndex(
-        idx.params,
-        idx.codes.join(batch.select(id_col), id_col, "left_anti"),
-    )
-    survivors = gate_against_phash_index(
-        prior,
+    commit_batch(
         batch,
-        image_col,
-        max_hamming,
-        # one fingerprint pass serves guard + self-dedup + gate: the
-        # reduced batch's codes are the checkpointed bfp minus the
-        # self-dedup drops
-        batch_codes=bfp.join(self_doomed, id_col, "left_anti"),
-    ).localCheckpoint(eager=True)
-    survivors.write.mode("overwrite").parquet(
-        f"{out_dir.rstrip('/')}/data/__batch={batch_id}"
+        batch_id,
+        out_dir,
+        lambda spark: _phash_lane(spark, index_path, image_col, max_hamming),
     )
-    # the fold reuses the SAME fingerprint pass (bfp minus self-dedup
-    # drops, kept to survivor ids): empty/NULL-raster passthrough rows
-    # never fingerprint so they semi-join out, exactly matching what
-    # rehashing the survivors would produce
-    phash_index_apply(
-        spark,
-        index_path,
-        survivors,
-        image_col=image_col,
-        delta_codes=bfp.join(self_doomed, id_col, "left_anti").join(
-            survivors.select(id_col), id_col, "left_semi"
-        ),
-    )
-    fs.write_text(spark, marker, "committed")
-
-
-def stream_ingest_with_phash_gate(
-    stream: DataFrame,
-    index_path: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    image_col: str = "image",
-    max_hamming: int = 3,
-    available_now: bool = False,
-):
-    """The production image-ingest loop (what q192's static-index gate
-    demos, closed into a cycle like the dedup/BM25 serve-before-ingest
-    loops): every micro-batch is gated against the index state built
-    by ALL PRIOR batches, and its survivors are folded in before the
-    next batch arrives — batch N+1's duplicates of batch N's survivors
-    are rejected. Micro-batch work is batch-sized (band-join + verify
-    + O(delta) fold); the corpus is never refingerprinted.
-
-    Returns the started StreamingQuery; read admitted rows back with
-    ``streaming.pipeline.read_sink(spark, out_dir)``.
-
-    ``available_now=True`` drains the backlog and TERMINATES
-    (Trigger.AvailableNow — still honoring source rate limits like
-    maxFilesPerTrigger, so the backlog is processed in multiple
-    sequential gated-and-folded batches); the default runs the
-    continuous micro-batch trigger an always-on ingest wants.
-    """
-
-    def _on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        gate_and_fold_batch(
-            batch_df, batch_id, index_path, out_dir, image_col, max_hamming
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(_on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

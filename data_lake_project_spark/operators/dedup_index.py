@@ -46,6 +46,7 @@ from data_lake_project_spark.operators.dedup import (
     minhash_sets,
     shingle_sets,
 )
+from data_lake_project_spark.streaming.pipeline import GateLane, commit_batch
 
 
 @dataclass
@@ -140,8 +141,10 @@ def dedup_index_apply(
 
     By default the delta is anti-joined against the stored id set
     first, so a replayed/overlapping batch folds in as a no-op instead
-    of silently doubling an id's band rows (which would inflate every
-    future candidate set). The guard is one column-pruned scan +
+    of silently doubling an id's rows (which would inflate every
+    future candidate set). The stored ids come from ``sets``, which
+    holds one row per folded id — an empty doc has a ``sets`` row but
+    no ``bands`` rows. The guard is one column-pruned scan +
     distinct of the stored id column — O(index ids), not O(delta) —
     the right correctness default, but it grows with the standing
     index. High-frequency folds that already gated the batch (q102's
@@ -151,7 +154,7 @@ def dedup_index_apply(
     params = json.loads(fs.read_text(spark, f"{path}/params.json"))
     if not assume_new_ids:
         existing = (
-            spark.read.parquet(f"{path}/bands")
+            spark.read.parquet(f"{path}/sets")
             .select(params["id_col"])
             .distinct()
         )
@@ -291,6 +294,51 @@ def dedup_against_index(
     return batch.join(dup, id_col, "left_anti")
 
 
+def _text_lane(
+    spark: SparkSession, index_path: str, threshold: float
+) -> GateLane:
+    """The text lane of the gate-and-fold protocol, over the index
+    state at ``index_path``. The batch's shingle sets (cut by the
+    protocol) serve the collision guard and every reference inside the
+    gate; an empty or NULL text has a NULL set, so it carries no
+    fingerprint."""
+    idx = load_dedup_index(spark, index_path)
+    p = idx.params
+    id_col = p["id_col"]
+
+    def gate(batch: DataFrame, bsets: DataFrame) -> DataFrame:
+        own = batch.select(id_col)
+        prior = DedupIndex(
+            dict(p),
+            idx.bands.join(own, id_col, "left_anti"),
+            idx.sets.join(own, id_col, "left_anti"),
+        )
+        return dedup_against_index(
+            prior, batch, threshold, self_dedup=True, b_sets=bsets
+        )
+
+    # set equality via two containment sizes
+    inter = F.size(F.array_intersect("sh", "s_sh"))
+    return GateLane(
+        id_col=id_col,
+        fingerprint=lambda batch: shingle_sets(
+            batch, p["text_col"], id_col, p["k"]
+        ),
+        fingerprinted=F.col("sh").isNotNull(),
+        stored=idx.sets.filter(F.col("sh").isNotNull()).select(
+            id_col, F.col("sh").alias("s_sh")
+        ),
+        differs=(inter < F.size("sh")) | (inter < F.size("s_sh")),
+        gate=gate,
+        fold=lambda survivors, bsets: dedup_index_apply(
+            spark, index_path, survivors
+        ),
+        caller="gate_and_fold_text_batch",
+        fingerprint_name="shingle set",
+        payload_name="text",
+    )
+
+
 def gate_and_fold_text_batch(
     batch: DataFrame,
     batch_id: int,
@@ -298,131 +346,34 @@ def gate_and_fold_text_batch(
     out_dir: str,
     threshold: float = 0.5,
 ) -> None:
-    """One micro-batch of the TEXT streaming ingest-AND-fold loop —
-    the ``multimodal/phash_index.gate_and_fold_batch`` protocol
-    applied to the shingle/minhash lane (text crawl is the
-    highest-volume ingest a training-data pipeline runs; the
-    reference's at-least-once delivery, ``spark_stream.py:217-224``,
-    is exactly the window this closes): self-dedup the batch
-    (keep-lowest-id, ``dedup_against_index(self_dedup=True)``), gate
-    the survivors against the CURRENT index state, land them in the
-    batch's own sink directory, fold them into the index, mark the
-    batch committed.
-
-    Exactly-once under foreachBatch's at-least-once contract, by the
-    same construction as the image lane:
-
-    - committed marker present -> pure no-op;
-    - the gate runs against the index state EXCLUDING this batch's
-      own ids (one anti-join per stored table) — a replay after the
-      fold landed but before the marker re-derives the IDENTICAL
-      survivor set instead of rejecting every survivor as a duplicate
-      of its own folded shingles;
-    - the sink write is per-batch-directory overwrite
-      (``write_idempotent_foreach_batch`` layout, read via
-      ``read_sink``);
-    - the fold replays as a no-op through ``dedup_index_apply``'s
-      stored-id anti-join guard.
+    """One micro-batch of the TEXT ingest-AND-fold loop — the image
+    lane's protocol (``streaming.pipeline.commit_batch``) on the
+    shingle/minhash lane (text crawl is the highest-volume ingest a
+    training-data pipeline runs; the reference's at-least-once
+    delivery, ``spark_stream.py:217-224``, is exactly the window this
+    closes): self-dedup the batch (keep-lowest-id,
+    ``dedup_against_index(self_dedup=True)``), gate the survivors
+    against the CURRENT index state minus the batch's own ids (one
+    anti-join per stored table), land them in the batch's sink
+    directory, fold them into the index, mark the batch committed.
+    Stream it with ``write_idempotent_foreach_batch(
+    lane=functools.partial(gate_and_fold_text_batch, index_path=...))``.
 
     Id contract: ids are stable replay keys (same id => same text). A
-    batch id already stored with a DIFFERENT shingle set is an id
-    collision — admitted by the own-id-excluded gate but dropped by
-    the fold's guard, silently desyncing sink and index — so it
-    raises. The check joins stored sets on the batch ids only
-    (batch-sized fetch, set equality via two containment sizes).
+    batch id already stored with a DIFFERENT shingle set, or arriving
+    with an empty/NULL text while stored with a non-empty one, is an
+    id collision and raises. The check joins stored sets on the batch
+    ids only (batch-sized fetch). The fold replays as a no-op through
+    ``dedup_index_apply``'s stored-id guard.
 
     Per-batch work is batch-sized: the batch is shingled/banded once
     (``self_dedup=True`` reuses the band keys for the index gate),
     the corpus is touched only by the candidate band join + the
     candidates' set fetches, and the fold appends without rescanning.
-
-    Survivors are eagerly checkpointed before use: they feed BOTH the
-    sink write and the fold, and cutting lineage keeps the fold's
-    append from re-deriving a plan that re-scans the band/set
-    directories it is appending to.
     """
-    spark = batch.sparkSession
-    commits_dir = f"{out_dir.rstrip('/')}/_committed_batches"
-    marker = f"{commits_dir}/{batch_id}"
-    if fs.exists(spark, marker):
-        return
-    idx = load_dedup_index(spark, index_path)
-    p = idx.params
-    id_col = p["id_col"]
-    bsets = shingle_sets(
-        batch, p["text_col"], id_col, p["k"]
-    ).localCheckpoint(eager=True)
-    inter = F.size(F.array_intersect("sh", "s_sh"))
-    collisions = (
-        bsets.join(
-            idx.sets.select(id_col, F.col("sh").alias("s_sh")), id_col
-        )
-        .filter(
-            (inter < F.size("sh")) | (inter < F.size("s_sh"))
-        )
-        .select(id_col)
-        .limit(1)
-        .collect()
+    commit_batch(
+        batch,
+        batch_id,
+        out_dir,
+        lambda spark: _text_lane(spark, index_path, threshold),
     )
-    if collisions:
-        raise ValueError(
-            f"gate_and_fold_text_batch: batch id "
-            f"{collisions[0][id_col]!r} already stored with a "
-            "DIFFERENT shingle set — ids must be stable replay keys "
-            "(same id => same text); an id collision would desync "
-            "sink and index"
-        )
-    own = batch.select(id_col)
-    prior = DedupIndex(
-        dict(p),
-        idx.bands.join(own, id_col, "left_anti"),
-        idx.sets.join(own, id_col, "left_anti"),
-    )
-    survivors = dedup_against_index(
-        prior, batch, threshold, self_dedup=True, b_sets=bsets
-    ).localCheckpoint(eager=True)
-    survivors.write.mode("overwrite").parquet(
-        f"{out_dir.rstrip('/')}/data/__batch={batch_id}"
-    )
-    dedup_index_apply(spark, index_path, survivors)
-    fs.write_text(spark, marker, "committed")
-
-
-def stream_ingest_with_text_gate(
-    stream: DataFrame,
-    index_path: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    threshold: float = 0.5,
-    available_now: bool = False,
-):
-    """The production text-ingest loop (the image lane's
-    ``stream_ingest_with_phash_gate`` shape on the shingle/minhash
-    index): every micro-batch self-dedups, gates against the index
-    state built by ALL PRIOR batches, and folds its survivors in
-    before the next batch arrives — batch N+1's near-duplicates of
-    batch N's survivors are rejected BY THE FOLD. Micro-batch work is
-    batch-sized; the corpus is never re-shingled.
-
-    Returns the started StreamingQuery; read admitted rows back with
-    ``streaming.pipeline.read_sink(spark, out_dir)``.
-
-    ``available_now=True`` drains the backlog and TERMINATES (still
-    honoring maxFilesPerTrigger, so the backlog processes as multiple
-    sequential gated-and-folded batches); the default runs the
-    continuous micro-batch trigger an always-on crawl ingest wants.
-    """
-
-    def _on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        gate_and_fold_text_batch(
-            batch_df, batch_id, index_path, out_dir, threshold
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(_on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -5190,6 +5190,74 @@ def _await_stream(q, timeout_s: int = 600) -> None:
         )
 
 
+def _stream_ingest_fold(spark, prefix, base_path, schema, batches, lane):
+    """Run a gate-and-fold ``lane`` (``gate_and_fold_batch`` or
+    ``gate_and_fold_text_batch``) over ``batches`` as a real stream
+    and return (doc_id, admitted_in_batch), ordered by doc_id.
+
+    - The index is a fresh copy of the published ``base_path`` — the
+      loop MUTATES it, so it can never be the shared artifact.
+    - One parquet file per micro-batch with distinct ascending mtimes
+      (the file source orders pickup by modification time) and
+      maxFilesPerTrigger=1, drained under availableNow.
+    - Every per-call temp dir is named ``{prefix}*`` and deleted
+      before returning; the result rides an eager localCheckpoint
+      taken BEFORE the cleanup, so it holds no lineage into deleted
+      files.
+    """
+    import glob as _glob
+    import os as _os
+    import shutil as _shutil
+    import tempfile as _tempfile
+    from functools import partial
+
+    from data_lake_project_spark.streaming.pipeline import (
+        read_sink_batches,
+        write_idempotent_foreach_batch,
+    )
+
+    idx_path = _tempfile.mkdtemp(prefix=f"{prefix}idx_")
+    _shutil.rmtree(idx_path)
+    dirs = [idx_path]
+    try:
+        _shutil.copytree(base_path, idx_path)
+        src, stage, out, ckpt = (
+            _tempfile.mkdtemp(prefix=f"{prefix}{kind}_")
+            for kind in ("src", "stage", "out", "ckpt")
+        )
+        dirs += [src, stage, out, ckpt]
+        for i, b in enumerate(batches):
+            b.coalesce(1).write.mode("overwrite").parquet(f"{stage}/b{i}")
+            part = sorted(_glob.glob(f"{stage}/b{i}/part-*.parquet"))[0]
+            dst = _os.path.join(src, f"{i:02d}.parquet")
+            _shutil.copy(part, dst)
+            _os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        q = write_idempotent_foreach_batch(
+            stream,
+            out,
+            ckpt,
+            lane=partial(lane, index_path=idx_path),
+            available_now=True,
+        )
+        _await_stream(q)
+        admitted = (
+            read_sink_batches(spark, out)
+            .select(
+                "doc_id", F.col("batch_id").alias("admitted_in_batch")
+            )
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        for d_ in dirs:
+            _shutil.rmtree(d_, ignore_errors=True)
+    return admitted.orderBy("doc_id")
+
+
 def q177_stream_funnel_report(spark, sf):
     """The CUSTOM-STATEFUL streaming funnel
     (``streaming/stateful.funnel_stages`` — St3's
@@ -5873,8 +5941,8 @@ def q192_stream_phash_gate(spark, sf):
     re-encoded twin, or neither), and every micro-batch is gated
     against the published fingerprint index inside ``foreachBatch``
     (``gate_against_phash_index`` — batch-sized band-join + verify,
-    the streaming/pipeline.py micro-batch-sink shape), survivors
-    landing in a per-call parquet sink. The oracle is the q191
+    through the shared exactly-once ``foreachBatch`` driver),
+    survivors landing in a per-call parquet sink. The oracle is the q191
     derivation projected to the surviving ids: streaming the corpus
     through the gate must admit exactly the rows a batch gate admits
     — micro-batch boundaries cannot change a per-row decision against
@@ -5884,6 +5952,11 @@ def q192_stream_phash_gate(spark, sf):
     from data_lake_project_spark.multimodal.phash_index import (
         gate_against_phash_index,
         load_phash_index,
+    )
+    from data_lake_project_spark.streaming.pipeline import (
+        commit_batch,
+        read_sink,
+        write_idempotent_foreach_batch,
     )
 
     idx = load_phash_index(spark, _published_phash_index(spark, sf))
@@ -5916,31 +5989,19 @@ def q192_stream_phash_gate(spark, sf):
     )
 
     out = _tempfile.mkdtemp(prefix="spark_graft_q192_out_")
-
-    def gate_batch(bdf, batch_id):
-        # per-batch dir + overwrite (the write_idempotent_foreach_batch
-        # sink shape): foreachBatch is at-least-once, so a retried
-        # micro-batch must REWRITE its own directory, never append
-        # duplicates to a flat one
-        (
-            gate_against_phash_index(idx, bdf)
-            .select("doc_id")
-            .write.mode("overwrite")
-            .parquet(f"{out}/data/__batch={batch_id}")
-        )
-
-    q = (
-        roles.writeStream.foreachBatch(gate_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            _tempfile.mkdtemp(prefix="spark_graft_q192_ckpt_"),
-        )
-        .start()
+    q = write_idempotent_foreach_batch(
+        roles,
+        out,
+        _tempfile.mkdtemp(prefix="spark_graft_q192_ckpt_"),
+        # a static index: gate each micro-batch, fold nothing
+        lane=lambda bdf, batch_id, out_dir: commit_batch(
+            gate_against_phash_index(idx, bdf).select("doc_id"),
+            batch_id,
+            out_dir,
+        ),
+        available_now=True,
     )
     _await_stream(q)
-    from data_lake_project_spark.streaming.pipeline import read_sink
-
     return read_sink(spark, out).orderBy("doc_id")
 
 
@@ -6006,7 +6067,7 @@ def q193_perceptual_waterfall(spark, sf):
 
 def q194_stream_phash_ingest_fold(spark, sf):
     """The pHash ingest loop CLOSED: gate AND fold per micro-batch
-    (``multimodal/phash_index.stream_ingest_with_phash_gate``) — where
+    (``multimodal/phash_index.gate_and_fold_batch``) — where
     q192 serves every batch against a STATIC index, a production
     ingest pipeline admits each batch's survivors INTO the index
     before the next batch arrives, so batch N+1's perceptual
@@ -6031,17 +6092,11 @@ def q194_stream_phash_ingest_fold(spark, sf):
     index copy, src, stage, sink, checkpoint) are deleted before
     returning — the result rides an eager localCheckpoint, so the
     frame outlives its source files (round-12 verdict #3)."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from data_lake_project_spark.multimodal.phash_index import (
         build_phash_index,
+        gate_and_fold_batch,
         save_phash_index,
-        stream_ingest_with_phash_gate,
     )
-    from data_lake_project_spark.streaming.pipeline import read_sink
 
     # base index artifact: fingerprints of the doc_id % 4 == 0
     # originals, published once per corpus content fingerprint
@@ -6061,11 +6116,6 @@ def q194_stream_phash_ingest_fold(spark, sf):
             tmp,
         ),
     )
-    # fresh mutable copy per call — codes is ~40 B/row
-    idx_path = _tempfile.mkdtemp(prefix="spark_graft_q194_idx_")
-    _shutil.rmtree(idx_path)
-    _shutil.copytree(base_path, idx_path)
-
     twins = d.filter(F.col("doc_id") % 3 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.encode(
@@ -6076,47 +6126,14 @@ def q194_stream_phash_ingest_fold(spark, sf):
         originals.filter((F.col("doc_id") % 4).isin(1, 2)),
         originals.filter(F.col("doc_id") % 4 == 3).unionByName(twins),
     ]
-    # one file per micro-batch, distinct ascending mtimes: the file
-    # source orders pickup by modification time (funnel-test lesson)
-    src = _tempfile.mkdtemp(prefix="spark_graft_q194_src_")
-    stage = _tempfile.mkdtemp(prefix="spark_graft_q194_stage_")
-    for i, b in enumerate(batches):
-        b.coalesce(1).write.mode("overwrite").parquet(f"{stage}/b{i}")
-        part = sorted(_glob.glob(f"{stage}/b{i}/part-*.parquet"))[0]
-        dst = _os.path.join(src, f"{i:02d}.parquet")
-        _shutil.copy(part, dst)
-        _os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-
-    stream = (
-        spark.readStream.schema("doc_id long, image binary")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    return _stream_ingest_fold(
+        spark,
+        "spark_graft_q194_",
+        base_path,
+        "doc_id long, image binary",
+        batches,
+        gate_and_fold_batch,
     )
-    out = _tempfile.mkdtemp(prefix="spark_graft_q194_out_")
-    ckpt = _tempfile.mkdtemp(prefix="spark_graft_q194_ckpt_")
-    try:
-        q = stream_ingest_with_phash_gate(
-            stream,
-            idx_path,
-            out,
-            ckpt,
-            available_now=True,
-        )
-        _await_stream(q)
-        # eager checkpoint BEFORE the temp dirs vanish: the returned
-        # frame must not hold lineage into files the finally deletes
-        admitted = (
-            spark.read.parquet(f"{out}/data")
-            .select(
-                "doc_id",
-                F.col("__batch").cast("long").alias("admitted_in_batch"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        for d_ in (idx_path, src, stage, out, ckpt):
-            _shutil.rmtree(d_, ignore_errors=True)
-    return admitted.orderBy("doc_id")
 
 
 def q197_keyframe_dedup(spark, sf):
@@ -6583,7 +6600,7 @@ def q201_stream_text_ingest_fold(spark, sf):
     training-data pipeline runs, and the reference's at-least-once
     delivery window, ``spark_stream.py:217-224``, is exactly what the
     loop's exactly-once markers fix): gate AND fold per micro-batch
-    (``operators/dedup_index.stream_ingest_with_text_gate``) — where
+    (``operators/dedup_index.gate_and_fold_text_batch``) — where
     q136 serves one batch against a STATIC index, the production
     crawl cycle admits each batch's survivors INTO the index before
     the next batch arrives, so batch N+1's near-duplicates of batch
@@ -6602,15 +6619,10 @@ def q201_stream_text_ingest_fold(spark, sf):
     sequential admission with the same in-batch rule. Temp dirs are
     deleted before returning; the result rides an eager
     localCheckpoint (q194 hygiene)."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from data_lake_project_spark.operators.dedup_index import (
         build_dedup_index,
+        gate_and_fold_text_batch,
         save_dedup_index,
-        stream_ingest_with_text_gate,
     )
 
     base_path = (
@@ -6626,10 +6638,6 @@ def q201_stream_text_ingest_fold(spark, sf):
             tmp,
         ),
     )
-    idx_path = _tempfile.mkdtemp(prefix="spark_graft_q201_idx_")
-    _shutil.rmtree(idx_path)
-    _shutil.copytree(base_path, idx_path)
-
     twins = docs.filter(F.col("doc_id") % 3 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" dup")).alias("text"),
@@ -6638,43 +6646,14 @@ def q201_stream_text_ingest_fold(spark, sf):
         docs.filter((F.col("doc_id") % 4).isin(1, 2)),
         docs.filter(F.col("doc_id") % 4 == 3).unionByName(twins),
     ]
-    src = _tempfile.mkdtemp(prefix="spark_graft_q201_src_")
-    stage = _tempfile.mkdtemp(prefix="spark_graft_q201_stage_")
-    for i, b in enumerate(batches):
-        b.coalesce(1).write.mode("overwrite").parquet(f"{stage}/b{i}")
-        part = sorted(_glob.glob(f"{stage}/b{i}/part-*.parquet"))[0]
-        dst = _os.path.join(src, f"{i:02d}.parquet")
-        _shutil.copy(part, dst)
-        _os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    return _stream_ingest_fold(
+        spark,
+        "spark_graft_q201_",
+        base_path,
+        "doc_id long, text string",
+        batches,
+        gate_and_fold_text_batch,
     )
-    out = _tempfile.mkdtemp(prefix="spark_graft_q201_out_")
-    ckpt = _tempfile.mkdtemp(prefix="spark_graft_q201_ckpt_")
-    try:
-        q = stream_ingest_with_text_gate(
-            stream,
-            idx_path,
-            out,
-            ckpt,
-            available_now=True,
-        )
-        _await_stream(q)
-        admitted = (
-            spark.read.parquet(f"{out}/data")
-            .select(
-                "doc_id",
-                F.col("__batch").cast("long").alias("admitted_in_batch"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        for d_ in (idx_path, src, stage, out, ckpt):
-            _shutil.rmtree(d_, ignore_errors=True)
-    return admitted.orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------

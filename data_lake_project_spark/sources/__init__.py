@@ -133,20 +133,6 @@ def to_keyed_json_records(df: DataFrame, key_col: str | None = None) -> DataFram
     )
 
 
-def write_kafka(
-    df: DataFrame, bootstrap_servers: str, topic: str
-) -> None:  # pragma: no cover - needs connector + broker
-    """S10: produce (key, value) pairs to a topic
-    (``GetData.py:101-104``); requires the Kafka connector jar."""
-    (
-        df.selectExpr("CAST(key AS STRING)", "CAST(value AS STRING)")
-        .write.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-        .save()
-    )
-
-
 def delta_available() -> bool:
     """True when the delta-spark package (and so the Delta jars) can
     load. In this environment it returns False (verified: no jars);

@@ -12,9 +12,12 @@ This module keeps the same shape with the holes closed:
 - the parse path IS the pipeline (``parse_events``), the raw
   key/value stream is the bronze layer;
 - every sink is checkpointed;
-- ``write_idempotent_foreach_batch`` makes the micro-batch write
-  exactly-once by recording committed batch ids next to the data
-  (the parquet-friendly analogue of Delta's ``txnAppId/txnVersion``).
+- ``write_idempotent_foreach_batch`` is the one ``foreachBatch``
+  driver, and ``commit_batch`` the one exactly-once protocol behind
+  it: committed batch ids are recorded next to the data (the
+  parquet-friendly analogue of Delta's ``txnAppId/txnVersion``), and
+  the image and text gate-and-fold lanes plug into it as a
+  ``GateLane``.
 
 At scale: ``foreachBatch`` bodies run JVM-side DataFrame writes (the
 Python callback only *plans*), so the driver-side Python cost per
@@ -23,7 +26,10 @@ batch is constant, not per-row.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+from dataclasses import dataclass
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -147,65 +153,202 @@ def to_silver(parsed: DataFrame) -> DataFrame:
     )
 
 
+@dataclass(frozen=True)
+class GateLane:
+    """What a gate-and-fold lane supplies to :func:`commit_batch`,
+    bound to the index state loaded for one batch.
+
+    - ``fingerprint(batch)``: (``id_col``, fingerprint columns) of the
+      batch; the protocol cuts it and hands the cut to the guard, the
+      gate and the fold;
+    - ``fingerprinted``: the rows of that frame that carry a
+      fingerprint (``None``: all of them);
+    - ``stored``: (``id_col``, ``s_``-prefixed fingerprint columns) of
+      the stored ids that carry a fingerprint;
+    - ``differs``: the collision predicate over a batch fingerprint
+      joined to its stored one;
+    - ``gate(batch, fp)``: the survivors, gated against the index
+      minus the batch's own ids;
+    - ``fold(survivors, fp)``: append the survivors to the index,
+      skipping ids it already stores;
+    - ``caller``, ``fingerprint_name``, ``payload_name``: the words of
+      the collision error.
+    """
+
+    id_col: str
+    fingerprint: Callable[[DataFrame], DataFrame]
+    stored: DataFrame
+    differs: Column | str
+    gate: Callable[[DataFrame, DataFrame], DataFrame]
+    fold: Callable[[DataFrame, DataFrame], None]
+    caller: str
+    fingerprint_name: str
+    payload_name: str
+    fingerprinted: Column | None = None
+
+
+def _raise_on_id_collision(
+    lane: GateLane, batch: DataFrame, fp: DataFrame
+) -> None:
+    """Raise on a batch id that is not a stable replay key. Leg 1: a
+    fingerprinted batch id stored with a DIFFERENT fingerprint. Leg 2:
+    a batch id with NO fingerprint (empty or NULL payload) whose id is
+    stored with one — same id, different payload, arriving through the
+    no-fingerprint passthrough, which would otherwise bypass leg 1."""
+    id_col = lane.id_col
+    if lane.fingerprinted is not None:
+        fp = fp.filter(lane.fingerprinted)
+    hit = (
+        fp.join(lane.stored, id_col)
+        .filter(lane.differs)
+        .select(id_col)
+        .unionByName(
+            batch.select(id_col)
+            .join(fp.select(id_col), id_col, "left_anti")
+            .join(lane.stored.select(id_col), id_col, "left_semi")
+        )
+        .limit(1)
+        .collect()
+    )
+    if hit:
+        raise ValueError(
+            f"{lane.caller}: batch id {hit[0][id_col]!r} already stored "
+            f"with a DIFFERENT {lane.fingerprint_name} — ids must be "
+            "stable replay keys (same id => same "
+            f"{lane.payload_name}); an id collision would desync sink "
+            "and index"
+        )
+
+
+def commit_batch(
+    batch: DataFrame,
+    batch_id: int,
+    out_dir: str,
+    open_lane: Callable[[SparkSession], GateLane] | None = None,
+) -> None:
+    """One micro-batch of the exactly-once protocol every
+    ``foreachBatch`` sink here runs (S3 analog). This module is the
+    only code that knows the sink layout; read a sink back with
+    :func:`read_sink` or :func:`read_sink_batches`.
+
+    1. The batch's marker ``_committed_batches/<id>`` exists: no-op
+       (replay after a restart).
+    2. Admit. Without a lane the batch lands as-is. With one,
+       ``open_lane(spark)`` loads the lane's index, the batch is
+       fingerprinted and cut, the id-collision guard runs, and the
+       lane's gate (against the index minus the batch's own ids)
+       yields the survivors, which are cut.
+    3. Overwrite ``data/__batch=<id>`` with the admitted rows.
+    4. Fold the survivors into the lane's index (lanes only).
+    5. Write the marker.
+
+    Why every crash window is closed, under foreachBatch's
+    at-least-once delivery:
+
+    - the sink write is a per-batch directory overwrite, so a replayed
+      batch (restart, lost checkpoint, lost marker) rewrites its own
+      directory instead of appending duplicates — the marker is only
+      a fast skip;
+    - the gate excludes the batch's own ids from the index, so a
+      replay after the fold landed but before the marker re-derives
+      the IDENTICAL survivors instead of rejecting each one as a
+      duplicate of its own folded fingerprint (silent data loss);
+    - each lane's fold skips ids it already stores, so a replayed
+      fold is a no-op;
+    - ids are stable replay keys (same id => same payload); the guard
+      raises on a batch id that breaks this, which would otherwise be
+      admitted by the own-id-excluded gate and dropped by the fold
+      (sink/index desync).
+
+    The survivors are cut because they feed both the sink write and
+    the fold, and the cut keeps the fold's append from re-deriving a
+    plan that scans the index directory it appends to. Markers and
+    data go through the Hadoop FileSystem API (``fs``), so the
+    protocol works on ``hdfs://``/``s3a://`` as well as local disk.
+    With Delta available this collapses to ``txnAppId``/``txnVersion``.
+    """
+    spark = batch.sparkSession
+    out = out_dir.rstrip("/")
+    marker = f"{out}/_committed_batches/{batch_id}"
+    if fs.exists(spark, marker):
+        return
+    rows, lane = batch, None
+    if open_lane is not None:
+        lane = open_lane(spark)
+        fp = lane.fingerprint(batch).localCheckpoint(eager=True)
+        _raise_on_id_collision(lane, batch, fp)
+        rows = lane.gate(batch, fp).localCheckpoint(eager=True)
+    rows.write.mode("overwrite").parquet(f"{out}/data/__batch={batch_id}")
+    if lane is not None:
+        lane.fold(rows, fp)
+    fs.write_text(spark, marker, "committed")
+
+
 def write_idempotent_foreach_batch(
     stream: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
     key_cols: list[str] | None = None,
+    lane: Callable[..., None] | None = None,
+    available_now: bool = False,
 ):
-    """Checkpointed, effectively-once ``foreachBatch`` sink (S3 analog).
+    """The checkpointed, exactly-once ``foreachBatch`` driver: every
+    micro-batch goes through :func:`commit_batch` into ``out_dir``
+    (fixes reference Appendix B.7). Read it back with
+    :func:`read_sink`.
 
-    Fixes reference Appendix B.7 with TWO independent layers:
+    - Plain sink (``lane=None``): the batch lands as-is, de-duplicated
+      on ``key_cols`` when given.
+    - Gated sink: ``lane`` is a per-batch function with its lane
+      arguments bound, called as ``lane(batch_df, batch_id,
+      out_dir=out_dir)``, which ends in :func:`commit_batch` — e.g.
+      ``functools.partial(phash_index.gate_and_fold_batch,
+      index_path=...)`` or ``dedup_index.gate_and_fold_text_batch``
+      likewise. Each batch is then gated against the index state
+      built by ALL PRIOR batches and folded in before the next one
+      arrives.
 
-    1. **Idempotent by construction**: each micro-batch lands in its
-       own ``data/__batch=<id>`` subdirectory with ``overwrite`` mode,
-       so a replayed batch (restart, lost checkpoint) rewrites the
-       same directory instead of appending duplicates — correct even
-       if the marker write below is lost.
-    2. **Committed-batch markers** as a fast skip: a marker file per
-       durable batch short-circuits the replay without re-running the
-       batch plan. Markers live next to the data and go through the
-       Hadoop FileSystem API (``fs`` module), so the protocol works on
-       the same URI space as the data (``hdfs://``, ``s3a://``) — not
-       just the driver's local disk.
-
-    Read the sink back with ``read_sink`` (drops the ``__batch``
-    partition column). With Delta available this collapses to
-    ``.writeStream.format("delta")`` + ``txnAppId``; the layered
-    protocol keeps plain parquet correct.
-
-    The crash window between the data write and the marker write
-    (ADVICE round 1) is closed by layer 1: the replay overwrites, so
-    the marker is purely an optimization and "crash after append,
-    before marker" no longer duplicates.
+    ``available_now=True`` drains the backlog and TERMINATES
+    (Trigger.AvailableNow — still honoring source rate limits like
+    maxFilesPerTrigger, so a backlog runs as several sequential
+    batches); the default runs the continuous micro-batch trigger an
+    always-on ingest wants.
     """
-    commits_dir = f"{out_dir.rstrip('/')}/_committed_batches"
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        marker = f"{commits_dir}/{batch_id}"
-        if fs.exists(spark, marker):
-            return  # replayed batch after restart: already durable
-        df = batch_df
-        if key_cols:
-            df = df.dropDuplicates(key_cols)
-        df.write.mode("overwrite").parquet(
-            f"{out_dir.rstrip('/')}/data/__batch={batch_id}"
-        )
-        fs.write_text(spark, marker, "committed")
+        if lane is not None:
+            lane(batch_df, batch_id, out_dir=out_dir)
+        else:
+            commit_batch(
+                batch_df.dropDuplicates(key_cols) if key_cols else batch_df,
+                batch_id,
+                out_dir,
+            )
 
-    return (
+    writer = (
         stream.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
-        .start()
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def read_sink_batches(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Read back a :func:`commit_batch` sink with the ``batch_id``
+    (long) each row was admitted in."""
+    return (
+        spark.read.parquet(f"{out_dir.rstrip('/')}/data")
+        .withColumn("batch_id", F.col("__batch").cast("long"))
+        .drop("__batch")
     )
 
 
 def read_sink(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Read back a ``write_idempotent_foreach_batch`` sink: the
-    ``__batch=<id>`` partition directories are an implementation
-    detail, so the discovered ``__batch`` column is dropped."""
+    """Read back a :func:`commit_batch` sink: the ``__batch=<id>``
+    partition directories are an implementation detail, so the
+    discovered ``__batch`` column is dropped."""
     return spark.read.parquet(f"{out_dir.rstrip('/')}/data").drop("__batch")
 
 
@@ -357,38 +500,6 @@ def scd2_marker_gc(
         max_age_s,
         now_ms=now_ms,
     )
-
-
-def ensure_topic(
-    bootstrap_servers: str,
-    topic: str,
-    num_partitions: int = 1,
-    replication_factor: int = 1,
-) -> None:  # pragma: no cover - needs a broker + kafka client
-    """S2: create the topic if absent (``spark_stream.py:12-40``).
-
-    Driver-side admin setup, not a data operator. The kafka client is
-    an optional extra; at scale the partition count should match the
-    consuming job's target parallelism (the reference's 1 partition
-    caps the whole stream at one task).
-    """
-    try:
-        from kafka.admin import KafkaAdminClient, NewTopic  # type: ignore
-        from kafka.errors import TopicAlreadyExistsError  # type: ignore
-    except ImportError as exc:
-        raise NotImplementedError(
-            "kafka-python not installed; install the 'kafka' extra "
-            "on the cluster image"
-        ) from exc
-    admin = KafkaAdminClient(bootstrap_servers=bootstrap_servers)
-    try:
-        admin.create_topics(
-            [NewTopic(topic, num_partitions, replication_factor)]
-        )
-    except TopicAlreadyExistsError:
-        pass
-    finally:
-        admin.close()
 
 
 def write_stream_ivm(

@@ -746,15 +746,18 @@ def test_stream_phash_ingest_fold_equals_sequential(spark, tmp_path):
     import hashlib
     import os
     import shutil
+    from functools import partial
 
     from data_lake_project_spark.multimodal.phash_index import (
         build_phash_index,
         gate_and_fold_batch,
         load_phash_index,
         save_phash_index,
-        stream_ingest_with_phash_gate,
     )
-    from data_lake_project_spark.streaming.pipeline import read_sink
+    from data_lake_project_spark.streaming.pipeline import (
+        read_sink,
+        write_idempotent_foreach_batch,
+    )
 
     def img(seed, n=96):
         out, i = b"", 0
@@ -796,13 +799,13 @@ def test_stream_phash_ingest_fold_equals_sequential(spark, tmp_path):
     idx_stream = str(tmp_path / "idx_stream")
     shutil.copytree(base, idx_stream)
     out_stream = str(tmp_path / "out_stream")
-    q = stream_ingest_with_phash_gate(
+    q = write_idempotent_foreach_batch(
         spark.readStream.schema("doc_id long, image binary")
         .option("maxFilesPerTrigger", 1)
         .parquet(src),
-        idx_stream,
         out_stream,
         str(tmp_path / "ckpt"),
+        lane=partial(gate_and_fold_batch, index_path=idx_stream),
     )
     q.processAllAvailable()
     q.stop()

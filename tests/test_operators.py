@@ -2042,15 +2042,18 @@ def test_stream_text_ingest_fold_equals_sequential(spark, tmp_path):
     import glob
     import os
     import shutil
+    from functools import partial
 
     from data_lake_project_spark.operators.dedup_index import (
         build_dedup_index,
         gate_and_fold_text_batch,
         load_dedup_index,
         save_dedup_index,
-        stream_ingest_with_text_gate,
     )
-    from data_lake_project_spark.streaming.pipeline import read_sink
+    from data_lake_project_spark.streaming.pipeline import (
+        read_sink,
+        write_idempotent_foreach_batch,
+    )
 
     t1 = "the quick brown fox jumps over the lazy dog today"
     ta = "pack my box with five dozen brown liquor jugs now"
@@ -2084,13 +2087,13 @@ def test_stream_text_ingest_fold_equals_sequential(spark, tmp_path):
     idx_stream = str(tmp_path / "idx_stream")
     shutil.copytree(base, idx_stream)
     out_stream = str(tmp_path / "out_stream")
-    q = stream_ingest_with_text_gate(
+    q = write_idempotent_foreach_batch(
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
         .parquet(src),
-        idx_stream,
         out_stream,
         str(tmp_path / "ckpt"),
+        lane=partial(gate_and_fold_text_batch, index_path=idx_stream),
     )
     q.processAllAvailable()
     q.stop()
@@ -2135,6 +2138,12 @@ def test_stream_text_ingest_fold_equals_sequential(spark, tmp_path):
     assert rows(read_sink(spark, out_seq).select("doc_id")) == rows(
         read_sink(spark, out_stream).select("doc_id")
     )
+    # the same window for an empty doc, which folds as a sets row with
+    # no band rows: the replayed fold must still see it as stored
+    empty = spark.createDataFrame([(30, "")], "doc_id long, text string")
+    gate_and_fold_text_batch(empty, 2, idx_seq, out_seq)
+    os.remove(os.path.join(out_seq, "_committed_batches", "2"))
+    gate_and_fold_text_batch(empty, 2, idx_seq, out_seq)
     sets = load_dedup_index(spark, idx_seq).sets
     assert sets.count() == sets.select("doc_id").distinct().count()
 
@@ -2142,8 +2151,10 @@ def test_stream_text_ingest_fold_equals_sequential(spark, tmp_path):
 def test_gate_and_fold_text_id_collision_raises(spark, tmp_path):
     """Text-lane twin of the phash id-collision guard: a batch id
     already stored with a DIFFERENT shingle set raises (ids are
-    stable replay keys); a true replay (same id, same text) passes
-    and folds as a no-op."""
+    stable replay keys), and so does a stored id re-delivered with an
+    EMPTY or NULL text (no shingle set, so only the guard's second
+    leg sees it); a true replay (same id, same text — empty included)
+    passes and folds as a no-op."""
     import pytest
 
     from data_lake_project_spark.operators.dedup_index import (
@@ -2156,7 +2167,9 @@ def test_gate_and_fold_text_id_collision_raises(spark, tmp_path):
     idx = str(tmp_path / "idx")
     save_dedup_index(
         build_dedup_index(
-            spark.createDataFrame([(1, t1)], "doc_id long, text string")
+            spark.createDataFrame(
+                [(1, t1), (2, "")], "doc_id long, text string"
+            )
         ),
         idx,
     )
@@ -2170,9 +2183,25 @@ def test_gate_and_fold_text_id_collision_raises(spark, tmp_path):
             idx,
             str(tmp_path / "out_bad"),
         )
+    for bad in ("", None):
+        with pytest.raises(ValueError, match="DIFFERENT shingle set"):
+            gate_and_fold_text_batch(
+                spark.createDataFrame(
+                    [(1, bad)], "doc_id long, text string"
+                ),
+                0,
+                idx,
+                str(tmp_path / "out_bad"),
+            )
     gate_and_fold_text_batch(
         spark.createDataFrame([(1, t1)], "doc_id long, text string"),
         0,
+        idx,
+        str(tmp_path / "out_ok"),
+    )
+    gate_and_fold_text_batch(
+        spark.createDataFrame([(2, "")], "doc_id long, text string"),
+        1,
         idx,
         str(tmp_path / "out_ok"),
     )

@@ -1676,3 +1676,26 @@ def test_funnel_null_ts_key_still_reports(spark, tmp_path):
         r.key: r.stage for r in spark.table("mem_funnel_null_ts").collect()
     }
     assert final == {"u_null": 0, "u_ok": 2}
+
+
+def test_sink_layout_is_private_to_pipeline():
+    """Only ``streaming/pipeline.py`` knows the exactly-once sink
+    layout (commit markers and per-batch data directories); every
+    other package module goes through ``commit_batch``/``read_sink``."""
+    from pathlib import Path
+
+    import data_lake_project_spark
+
+    pkg = Path(data_lake_project_spark.__file__).parent
+    owner = pkg / "streaming" / "pipeline.py"
+    offenders = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if p != owner
+        and any(
+            lit in p.read_text()
+            for lit in ("_committed_batches", "data/__batch=")
+        )
+    )
+    assert offenders == []
+    assert "_committed_batches" in owner.read_text()
