@@ -35,7 +35,9 @@ from data_lake_project_spark.operators import interval as IV
 from data_lake_project_spark.operators import similarity as SIM
 from data_lake_project_spark.operators import text as TX
 from data_lake_project_spark.operators.asof import asof_join
-from data_lake_project_spark.tables import load_table
+from data_lake_project_spark.fs import _publish_if_absent
+from data_lake_project_spark.streaming.pipeline import _await_stream
+from data_lake_project_spark.tables import _dataset_fingerprint, load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -553,89 +555,6 @@ def q133_ivfpq_topk(spark, sf):
     return SIM.ivfpq_topk(e, probes, k=10, dim=64).orderBy(
         "probe_id", "vec_id"
     )
-
-
-def _dataset_fingerprint(sf: str, table: str) -> str:
-    """Driver-side CONTENT fingerprint of a fixture table folded into
-    /tmp index-cache keys, so a cached artifact is REBUILT when the
-    underlying data changes instead of silently serving results from a
-    previous corpus. Hashes actual bytes (full file below 16 MB, else
-    size + head/tail 1 MB samples) AND the mtime — size+mtime alone
-    missed an in-place regeneration with identical sizes inside the
-    same mtime second (round-5 review), and content samples alone
-    would miss a middle-only rewrite of a large file (round-6 review):
-    together, a stale hit needs identical samples in the same mtime
-    second. Local paths only — which is what the /tmp build-if-absent
-    lifecycle is for; a cluster deployment versions its indexes
-    explicitly."""
-    import glob as _glob
-    import hashlib as _hashlib
-    import os as _os
-
-    base = _os.path.join(sf, f"{table}.parquet")
-    h = _hashlib.md5()
-    for pth in sorted(
-        _glob.glob(base)
-        + _glob.glob(_os.path.join(base, "**", "*"), recursive=True)
-    ):
-        if _os.path.isdir(pth):
-            h.update(f"{pth}|dir".encode())
-            continue
-        st = _os.stat(pth)
-        size = st.st_size
-        h.update(f"{pth}|{size}|{st.st_mtime_ns}".encode())
-        with open(pth, "rb") as fh:
-            if size <= 16 * 1024 * 1024:
-                for block in iter(lambda: fh.read(1 << 20), b""):
-                    h.update(block)
-            else:
-                h.update(fh.read(1 << 20))
-                fh.seek(-(1 << 20), _os.SEEK_END)
-                h.update(fh.read(1 << 20))
-    return h.hexdigest()[:12]
-
-
-def _publish_if_absent(spark, path: str, build_fn) -> None:
-    """Single-winner build-if-absent publish for /tmp index caches:
-    build into a unique temp directory next to ``path`` and atomically
-    ``os.rename`` it in. Concurrent runs never observe a half-written
-    index (readers either see nothing — and build their own — or a
-    fully-published directory), and a published path is never
-    overwritten in place (a changed fixture changes the fingerprint
-    and therefore the path). The loser of a publish race deletes its
-    temp build and reads the winner's.
-
-    The presence gate is the PATH ITSELF: because publication is an
-    atomic rename of a fully-built temp dir, an existing path IS a
-    complete index — no per-lane marker file needed. (A marker gate
-    on ``model.json`` silently rebuilt-and-discarded the BM25 lane
-    every run, whose save writes ``params.json`` — the index was
-    'persisted' but every q150 execution still paid the full build.)
-    """
-    import errno as _errno
-    import os as _os
-    import shutil as _shutil
-    import uuid as _uuid
-
-    from data_lake_project_spark import fs
-
-    if fs.exists(spark, path):
-        return
-    tmp = f"{path}.build-{_os.getpid()}-{_uuid.uuid4().hex[:8]}"
-    try:
-        build_fn(tmp)
-        _os.rename(tmp, path)
-    except OSError as exc:
-        # ENOTEMPTY/EEXIST: another run published first — use theirs
-        if exc.errno not in (_errno.ENOTEMPTY, _errno.EEXIST):
-            _shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        _shutil.rmtree(tmp, ignore_errors=True)
-    except BaseException:
-        # failed build (OOM, interrupt, disk full): never leave the
-        # partial temp dir accumulating in /tmp
-        _shutil.rmtree(tmp, ignore_errors=True)
-        raise
 
 
 def q137_ann_index_search(spark, sf):
@@ -5171,23 +5090,6 @@ def _stream_table_source(spark, sf, table: str):
     return spark.readStream.schema(
         spark.read.parquet(path).schema
     ).parquet(src_dir)
-
-
-def _await_stream(q, timeout_s: int = 600) -> None:
-    """``awaitTermination(timeout)`` returns FALSE on timeout with
-    the query still running — reading the memory sink then would
-    snapshot a partial result, and a rerun in the same session would
-    fail on the duplicate active queryName. Stop the straggler and
-    fail loudly instead of returning a silently-wrong frame."""
-    if not q.awaitTermination(timeout_s):
-        name = q.name
-        q.stop()
-        raise TimeoutError(
-            f"streaming query {name!r} still running after "
-            f"{timeout_s}s (availableNow batch should finish in "
-            "seconds) — stopped it rather than snapshot a partial "
-            "memory-sink table"
-        )
 
 
 def _stream_ingest_fold(spark, prefix, base_path, schema, batches, lane):

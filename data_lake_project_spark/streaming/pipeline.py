@@ -627,3 +627,20 @@ def marker_gc(
             fs.delete(spark, name, recursive=False)
             deleted += 1
     return deleted
+
+
+def _await_stream(q, timeout_s: int = 600) -> None:
+    """``awaitTermination(timeout)`` returns FALSE on timeout with
+    the query still running — reading the memory sink then would
+    snapshot a partial result, and a rerun in the same session would
+    fail on the duplicate active queryName. Stop the straggler and
+    fail loudly instead of returning a silently-wrong frame."""
+    if not q.awaitTermination(timeout_s):
+        name = q.name
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {name!r} still running after "
+            f"{timeout_s}s (availableNow batch should finish in "
+            "seconds) — stopped it rather than snapshot a partial "
+            "memory-sink table"
+        )

@@ -4682,11 +4682,9 @@ def test_gdpr_capstone_partial_replay_crash(spark, tmp_path, monkeypatch):
 
     import pytest as _pytest
 
+    from data_lake_project_spark.fs import _publish_if_absent
     from data_lake_project_spark.operators import erasure
-    from data_lake_project_spark.queries import (
-        _gdpr_build_fn,
-        _publish_if_absent,
-    )
+    from data_lake_project_spark.queries import _gdpr_build_fn
 
     sf = "/root/testdata/sf0.001"
     path = str(tmp_path / "gdpr")
