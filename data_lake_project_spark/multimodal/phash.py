@@ -39,6 +39,8 @@ exact-before-MinHash.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -60,13 +62,26 @@ def ahash64(
     ``prefix`` namespaces the five output columns (``prefix +
     "pband0"``...) so two fingerprint sets can coexist in one frame.
     """
+    out = df
+    for name, col in _ahash_stages(image_col, prefix):
+        out = out.withColumn(name, col)
+    return out.drop("__hex", "__n", "__smp", "__tot")
+
+
+@functools.cache
+def _ahash_stages(image_col: str, prefix: str) -> tuple:
+    """The ``ahash64`` columns as ``(name, expression)`` pairs, one
+    ``withColumn`` each, built once per process: they are unresolved
+    expressions bound to no frame or session, and rebuilding the
+    lambda trees costs ~500 py4j round trips per call."""
     # the hex rendering is referenced by all 64 samples — its own
     # multi-referenced Project keeps it single-evaluation
     # (CollapseProject never inlines a multi-referenced non-trivial
     # alias)
-    out = df.withColumn("__hex", F.hex(F.col(image_col))).withColumn(
-        "__n", F.length(F.col(image_col)).cast("long")
-    )
+    stages = {
+        "__hex": F.hex(F.col(image_col)),
+        "__n": F.length(F.col(image_col)).cast("long"),
+    }
     # sample j reads the byte at floor(j*n/64) (0-based): two hex
     # nibbles starting at 2*floor(j*n/64)+1 in the hex rendering.
     # floor() on the double quotient is exact here (j*n < 2^53 for
@@ -89,11 +104,10 @@ def ahash64(
             10,
         ).cast("long"),
     )
-    out = out.withColumn("__smp", F.when(F.col("__n") > 0, samples))
-    total = F.aggregate(
+    stages["__smp"] = F.when(F.col("__n") > 0, samples)
+    stages["__tot"] = F.aggregate(
         "__smp", F.lit(0).cast("long"), lambda acc, x: acc + x
     )
-    out = out.withColumn("__tot", total)
     def _band_fold(b):
         # a closure factory, NOT a default arg on the lambda: pyspark
         # derives the SQL lambda's arity from the Python signature, so
@@ -120,26 +134,23 @@ def ahash64(
         # an empty buffer must fingerprint as NULL, not as band 0 (a
         # genuinely uniform raster hashes to 0 — the two must not
         # collide)
-        out = out.withColumn(
-            f"{prefix}pband{b}", F.when(F.col("__tot").isNotNull(), band)
+        stages[f"{prefix}pband{b}"] = F.when(
+            F.col("__tot").isNotNull(), band
         )
-    return out.withColumn(
-        f"{prefix}phash",
-        F.concat(
-            *[
-                F.lpad(
-                    F.lower(F.hex(F.col(f"{prefix}pband{b}"))), 4, "0"
-                )
-                for b in reversed(range(N_BANDS))
-            ]
-        ),
-    ).drop("__hex", "__n", "__smp", "__tot")
+    stages[f"{prefix}phash"] = F.concat(
+        *[
+            F.lpad(F.lower(F.hex(F.col(f"{prefix}pband{b}"))), 4, "0")
+            for b in reversed(range(N_BANDS))
+        ]
+    )
+    return tuple(stages.items())
 
 
+@functools.cache
 def hamming64(a_prefix: str, b_prefix: str):
     """Column expression: the Hamming distance between two banded
     fingerprints carried in one row under ``{a_prefix}pband{b}`` /
-    ``{b_prefix}pband{b}`` columns."""
+    ``{b_prefix}pband{b}`` columns (built once per prefix pair)."""
     parts = [
         F.bit_count(
             F.col(f"{a_prefix}pband{b}").bitwiseXOR(
@@ -152,6 +163,45 @@ def hamming64(a_prefix: str, b_prefix: str):
     for p in parts[1:]:
         total = total + p
     return total
+
+
+def band_rows(
+    fps: DataFrame, id_col: str, out_id: str, prefix: str
+) -> DataFrame:
+    """(``id_col``, pband0..3) -> (``out_id``, ``{prefix}pband0..3``,
+    band, val): one row per band, each carrying its FULL fingerprint,
+    so a band equi-join verifies Hamming inline — the shape shared by
+    ``phash_neardup`` and ``phash_index.phash_index_matches``."""
+    explode, flat = _band_select(id_col, out_id, prefix)
+    return fps.select(*explode).select(*flat)
+
+
+@functools.cache
+def _band_select(id_col: str, out_id: str, prefix: str) -> tuple:
+    """``band_rows``' two select lists, built once per key."""
+    fp_cols = [f"{prefix}{c}" for c in _BAND_COLS]
+    explode = (
+        F.col(id_col).alias(out_id),
+        *[F.col(c).alias(n) for c, n in zip(_BAND_COLS, fp_cols)],
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.col(f"pband{b}").alias("val"),
+                    )
+                    for b in range(N_BANDS)
+                ]
+            )
+        ).alias("bk"),
+    )
+    flat = (
+        F.col(out_id),
+        *[F.col(n) for n in fp_cols],
+        F.col("bk.band"),
+        F.col("bk.val"),
+    )
+    return explode, flat
 
 
 def phash_neardup(
@@ -213,33 +263,8 @@ def phash_neardup(
         .localCheckpoint(eager=True)
         .filter(F.col(_BAND_COLS[0]).isNotNull())
     )
-    keyed = f.select(
-        F.col(id_col).alias("__id"),
-        *_BAND_COLS,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.col(f"pband{b}").alias("val"),
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("__id", *_BAND_COLS, "bk.band", "bk.val")
-    a_side = keyed.select(
-        F.col("__id").alias("id_a"),
-        *[F.col(c).alias(f"a_{c}") for c in _BAND_COLS],
-        "band",
-        "val",
-    )
-    b_side = keyed.select(
-        F.col("__id").alias("id_b"),
-        *[F.col(c).alias(f"b_{c}") for c in _BAND_COLS],
-        "band",
-        "val",
-    )
+    a_side = band_rows(f, id_col, "id_a", "a_")
+    b_side = band_rows(f, id_col, "id_b", "b_")
     if n_salts:
         from data_lake_project_spark.operators.skew import salted_join
 

@@ -18,13 +18,15 @@ gets by construction.
 
 Serving: band-join the batch fingerprints against the stored codes
 (4x16-bit bands — exact recall for Hamming <= 3, the
-``phash.phash_neardup`` pigeonhole), verify with ``bit_count(xor)``.
-Join cost scales with the batch band count, never the corpus.
+``phash.phash_neardup`` pigeonhole) with every band row carrying its
+full fingerprint, so ``bit_count(xor)`` verifies INLINE in the band
+join and the only dedupe is one output-sized ``distinct`` (the
+round-13 ``phash_neardup`` shape). Join cost scales with the batch
+band count, never the corpus.
 """
 
 from __future__ import annotations
 
-import functools
 import json
 from dataclasses import dataclass
 
@@ -36,7 +38,9 @@ from data_lake_project_spark.multimodal.phash import (
     N_BANDS,
     _BAND_COLS,
     ahash64,
+    band_rows,
     hamming64,
+    phash_neardup,
 )
 from data_lake_project_spark.streaming.pipeline import GateLane, commit_batch
 
@@ -91,36 +95,31 @@ def phash_index_apply(
     new_images: DataFrame,
     image_col: str = "image",
     assume_new_ids: bool = False,
-    delta_codes: DataFrame | None = None,
 ) -> PhashIndex:
     """The O(delta) maintenance fold: fingerprint ONLY the new images
     and append — the corpus is never rescanned. Same replay guard as
     ``dedup_index_apply``: by default the delta anti-joins the stored
     id set so an overlapping batch folds in as a no-op instead of
     doubling an id's band rows; a pre-gated high-frequency ingest
-    passes ``assume_new_ids=True`` to stay strictly O(delta).
-    ``delta_codes``: precomputed fingerprints of ``new_images`` (the
-    gate-and-fold loop already holds one fingerprint pass over the
-    batch — reuse it instead of rehashing the survivors; a
-    fingerprint is a pure per-row function of the bytes, so the two
-    paths are row-identical by construction)."""
-    p = path.rstrip("/")
-    params = json.loads(fs.read_text(spark, f"{p}/{_PARAMS}"))
-    id_col = params["id_col"]
-    codes = (
-        delta_codes
-        if delta_codes is not None
-        else build_phash_index(
-            new_images, image_col=image_col, id_col=id_col
-        ).codes
-    )
-    if not assume_new_ids:
-        existing = (
-            spark.read.parquet(f"{p}/codes").select(id_col).distinct()
-        )
-        codes = codes.join(existing, id_col, "left_anti")
-    codes.write.mode("append").parquet(f"{p}/codes")
-    return load_phash_index(spark, p)
+    passes ``assume_new_ids=True`` to stay strictly O(delta)."""
+    idx = load_phash_index(spark, path)
+    codes = build_phash_index(
+        new_images, image_col=image_col, id_col=idx.params["id_col"]
+    ).codes
+    if assume_new_ids:
+        codes.write.mode("append").parquet(f"{path.rstrip('/')}/codes")
+    else:
+        _fold_codes(idx, path, codes)
+    return load_phash_index(spark, path)
+
+
+def _fold_codes(idx: PhashIndex, path: str, codes: DataFrame) -> None:
+    """Append ``codes`` to the index at ``path`` (loaded as ``idx``),
+    skipping ids it already stores — a replayed fold is a no-op."""
+    id_col = idx.params["id_col"]
+    codes.join(idx.codes.select(id_col), id_col, "left_anti").write.mode(
+        "append"
+    ).parquet(f"{path.rstrip('/')}/codes")
 
 
 def erase_phash_index(
@@ -136,25 +135,6 @@ def erase_phash_index(
     p = path.rstrip("/")
     params = json.loads(fs.read_text(spark, f"{p}/{_PARAMS}"))
     return _erase_rows(spark, f"{p}/codes", params["id_col"], ids)
-
-
-def _band_rows(codes: DataFrame, id_col: str, out_id: str) -> DataFrame:
-    """(id, pband0..3) -> (out_id, band, val) — one row per band, the
-    LSH-candidate join key shape."""
-    return codes.select(
-        F.col(id_col).alias(out_id),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.col(f"pband{b}").alias("val"),
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select(out_id, "bk.band", "bk.val")
 
 
 def phash_index_matches(
@@ -191,30 +171,20 @@ def phash_index_matches(
         if batch_codes is None
         else batch_codes
     )
-    cand = (
-        _band_rows(bfp, id_col, "__bid")
-        .join(_band_rows(index.codes, id_col, "__cid"), ["band", "val"])
-        .select("__bid", "__cid")
-        .distinct()
-    )
-    a = bfp.select(
-        F.col(id_col).alias("__bid"),
-        *[F.col(c).alias(f"a_{c}") for c in _BAND_COLS],
-    )
-    b = index.codes.select(
-        F.col(id_col).alias("__cid"),
-        *[F.col(c).alias(f"b_{c}") for c in _BAND_COLS],
-    )
     return (
-        cand.join(a, "__bid")
-        .join(b, "__cid")
+        band_rows(bfp, id_col, "__bid", "a_")
+        .join(
+            band_rows(index.codes, id_col, "__cid", "b_"), ["band", "val"]
+        )
         .withColumn("hamming", hamming64("a_", "b_"))
         .filter(F.col("hamming") <= max_hamming)
+        # output-sized dedupe: a pair arrives once per matching band
         .select(
             F.col("__bid").alias(id_col),
             F.col("__cid").alias("dup_of"),
             "hamming",
         )
+        .distinct()
     )
 
 
@@ -248,27 +218,20 @@ def _phash_lane(
     state at ``index_path``. One fingerprint pass over the batch
     (``fp``, cut by the protocol) serves the collision guard, the
     intra-batch self-join, the index gate and the fold."""
-    from data_lake_project_spark.multimodal.phash import phash_neardup
-
     idx = load_phash_index(spark, index_path)
     id_col = idx.params["id_col"]
 
-    @functools.cache
-    def doomed(fp: DataFrame) -> DataFrame:
-        # keep-lowest-id: the larger-id end of every in-batch pair;
-        # cached so the gate and the fold share one eager pair cut
-        return (
+    def gate(batch: DataFrame, fp: DataFrame) -> DataFrame:
+        # keep-lowest-id: the larger-id end of every in-batch pair is
+        # doomed. One anti-join against it keeps every non-doomed row —
+        # fingerprinted survivors AND empty/NULL rasters (which never
+        # fingerprint, so never appear in a pair) — with no
+        # special-case passthrough union
+        drop = (
             phash_neardup(fp, id_col=id_col, max_hamming=max_hamming)
             .select(F.col("id_b").alias(id_col))
             .distinct()
         )
-
-    def gate(batch: DataFrame, fp: DataFrame) -> DataFrame:
-        # one anti-join against the doomed ends keeps every non-doomed
-        # row — fingerprinted survivors AND empty/NULL rasters (which
-        # never fingerprint, so never appear in a pair) — with no
-        # special-case passthrough union
-        drop = doomed(fp)
         batch = batch.join(drop, id_col, "left_anti")
         prior = PhashIndex(
             idx.params,
@@ -284,16 +247,13 @@ def _phash_lane(
 
     def fold(survivors: DataFrame, fp: DataFrame) -> None:
         # the fold reuses the same fingerprint pass, kept to survivor
-        # ids: empty/NULL-raster passthrough rows never fingerprint,
-        # exactly matching what rehashing the survivors would produce
-        phash_index_apply(
-            spark,
+        # ids (which already exclude the doomed ones): empty/NULL-raster
+        # passthrough rows never fingerprint, exactly matching what
+        # rehashing the survivors would produce
+        _fold_codes(
+            idx,
             index_path,
-            survivors,
-            image_col=image_col,
-            delta_codes=fp.join(doomed(fp), id_col, "left_anti").join(
-                survivors.select(id_col), id_col, "left_semi"
-            ),
+            fp.join(survivors.select(id_col), id_col, "left_semi"),
         )
 
     return GateLane(
@@ -349,8 +309,8 @@ def gate_and_fold_batch(
     carries the SAME (id, bytes) rows. A batch id already stored with
     a DIFFERENT fingerprint, or arriving as an empty/NULL raster while
     stored with one, is an id collision, not a replay, and raises.
-    The fold replays as a no-op through ``phash_index_apply``'s
-    stored-id anti-join guard.
+    The fold replays as a no-op through ``_fold_codes``' stored-id
+    anti-join guard.
     """
     commit_batch(
         batch,

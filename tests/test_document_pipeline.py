@@ -631,6 +631,130 @@ def test_phash_index_lifecycle(spark, tmp_path):
     )
 
 
+def _mask_raster(mask: int) -> bytes:
+    """A 64-byte raster whose aHash IS ``mask``: sample j is byte j,
+    a set bit is a bright (200) byte and a clear bit a dark (0) one,
+    so bit j is set iff 200*64 > 200*popcount (0 < popcount < 64)."""
+    return bytes(200 if mask >> j & 1 else 0 for j in range(64))
+
+
+def test_phash_index_matches_exact_match_set(spark):
+    """The index match set equals a brute-force all-pairs Hamming scan
+    over the non-empty rows, exactly and without duplicate rows, on a
+    fixture built to stress the inline verify: pairs that match in
+    two or three bands (one output row each), pairs that share bands
+    but sit at Hamming 4-6 (no row), a batch row matching two stored
+    ids, and an empty batch raster (never matches, passes the
+    gate)."""
+    import hashlib
+
+    from data_lake_project_spark.multimodal.phash import (
+        ahash64,
+        hamming64,
+    )
+    from data_lake_project_spark.multimodal.phash_index import (
+        build_phash_index,
+        gate_against_phash_index,
+        phash_index_matches,
+    )
+
+    def h(seed):
+        return int.from_bytes(hashlib.md5(seed.encode()).digest()[:8], "little")
+
+    p, q = h("p"), h("q")
+    corpus = spark.createDataFrame(
+        [
+            (1, _mask_raster(p)),
+            (2, _mask_raster(p ^ 0b111 << 32)),  # 3 bits in band 2
+            (3, _mask_raster(q)),
+            (4, _mask_raster(h("r"))),
+        ],
+        "doc_id long, image binary",
+    )
+    batch = spark.createDataFrame(
+        [
+            # vs 1: Hamming 1, 3 shared bands; vs 2: Hamming 4
+            (10, _mask_raster(p ^ 1)),
+            # vs 1: Hamming 2, 2 shared bands; vs 2: Hamming 5
+            (11, _mask_raster(p ^ 1 << 1 ^ 1 << 17)),
+            # vs 3: shares band 3 only, Hamming 6
+            (12, _mask_raster(q ^ 0b11 ^ 0b11 << 16 ^ 0b11 << 32)),
+            (13, b""),
+            # vs 1: Hamming 2; vs 2: Hamming 3 — both share bands 0-1
+            (14, _mask_raster(p ^ 1 << 33 ^ 1 << 48)),
+            (15, _mask_raster(h("s"))),
+        ],
+        "doc_id long, image binary",
+    )
+    got = [
+        (r.doc_id, r.dup_of, r.hamming)
+        for r in phash_index_matches(
+            build_phash_index(corpus), batch
+        ).collect()
+    ]
+    assert len(got) == len({(i, d) for i, d, _ in got})
+    brute = {
+        (r.doc_id, r.dup_of, r.hamming)
+        for r in ahash64(batch.filter("length(image) > 0"), prefix="a_")
+        .crossJoin(
+            ahash64(corpus, prefix="b_").withColumnRenamed(
+                "doc_id", "dup_of"
+            )
+        )
+        .select("doc_id", "dup_of", hamming64("a_", "b_").alias("hamming"))
+        .filter("hamming <= 3")
+        .collect()
+    }
+    assert set(got) == brute == {(10, 1, 1), (11, 1, 2), (14, 1, 2), (14, 2, 3)}
+    assert sorted(
+        r.doc_id
+        for r in gate_against_phash_index(
+            build_phash_index(corpus), batch
+        ).collect()
+    ) == [12, 13, 15]
+
+
+def test_phash_expressions_are_built_once(spark, monkeypatch):
+    """The fingerprint's expression trees are built once per process:
+    a second ``build_phash_index`` on a fresh frame sends a handful of
+    py4j calls instead of rebuilding ~100 lambda-tree nodes (each
+    node is at least one JVM round trip). A prefixed fingerprint must
+    still equal the unprefixed one, so the memo keys on the prefix
+    too."""
+    from py4j.clientserver import ClientServerConnection
+
+    from data_lake_project_spark.multimodal.phash import ahash64
+    from data_lake_project_spark.multimodal.phash_index import (
+        build_phash_index,
+    )
+
+    schema = "doc_id long, image binary"
+    rows = [(1, _mask_raster(0xF0F0)), (2, bytes(range(96))), (3, b"")]
+    build_phash_index(spark.createDataFrame(rows, schema))
+    fresh = spark.createDataFrame(rows, schema)
+    calls = 0
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        nonlocal calls
+        calls += command.startswith("c\n")
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    build_phash_index(fresh)
+    monkeypatch.undo()
+    assert 0 < calls <= 150
+
+    cols = [f"pband{b}" for b in range(4)] + ["phash"]
+    plain = ahash64(fresh).select("doc_id", *cols)
+    prefixed = ahash64(fresh, prefix="x_").select(
+        "doc_id", *[f"x_{c}" for c in cols]
+    )
+    assert sorted(map(tuple, plain.collect())) == sorted(
+        map(tuple, prefixed.collect())
+    )
+
+
 def test_frame_scene_report(spark):
     """Shot-boundary detection over frame rows: a static clip opens
     one scene (Hamming 0 everywhere after frame 1), an alternating

@@ -771,3 +771,31 @@ def test_ab_test_is_one_aggregation_pass(spark):
     assert P.exchange_count(df) <= 1
     P.assert_no_cartesian(df)
     assert "BroadcastNestedLoopJoin" not in P.explain_str(df)
+
+
+def test_phash_index_matches_verifies_inline(spark):
+    """The index gate's match set is ONE band equi-join with the
+    Hamming verify inline (each band row carries its full
+    fingerprint), never the candidate ``distinct`` followed by two
+    fingerprint re-joins on the batch and stored ids: on a dense
+    corpus candidates outnumber verified pairs by orders of magnitude
+    and that shape shuffles them three times."""
+    import hashlib
+
+    from data_lake_project_spark.multimodal.phash_index import (
+        build_phash_index,
+        phash_index_matches,
+    )
+
+    corpus = spark.createDataFrame(
+        [(i, hashlib.md5(str(i).encode()).digest() * 4) for i in range(8)],
+        "doc_id long, image binary",
+    )
+    out = phash_index_matches(
+        build_phash_index(corpus), corpus.filter("doc_id < 3")
+    )
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    joins = [ln for ln in plan.splitlines() if "Join " in ln]
+    assert len(joins) == 1, plan
+    assert "band" in joins[0] and "val" in joins[0], joins
+    assert "__bid" not in joins[0] and "__cid" not in joins[0], joins
